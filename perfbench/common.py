@@ -132,6 +132,12 @@ def session(work: "WorkDir", traced: bool):
         stop_session(spark)
 
 
+def jobs_started(spark) -> int:
+    """Spark jobs submitted so far in this session: the DAG scheduler's
+    job counter, which needs no UI."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
 def stamp(spark) -> dict:
     from pyspark import __version__ as pyspark_version
     sc = spark.sparkContext
@@ -181,62 +187,86 @@ def gen_inputs(kind: str, seed: int, out_dir: str, **kw) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# peak memory of a process tree
+# CPU time and peak memory of a process tree
 # ---------------------------------------------------------------------------
 
-def _children_map() -> dict[int, list[int]]:
-    kids: dict[int, list[int]] = {}
+_TICK = os.sysconf("SC_CLK_TCK")
+_PAGE = os.sysconf("SC_PAGE_SIZE")
+
+
+def _stats() -> dict[int, tuple[int, list[str]]]:
+    """pid -> (ppid, the fields of /proc/<pid>/stat after the name)."""
+    out: dict[int, tuple[int, list[str]]] = {}
     for d in os.listdir("/proc"):
         if not d.isdigit():
             continue
         try:
             with open(f"/proc/{d}/stat") as f:
-                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
-        except (OSError, IndexError, ValueError):
+                fields = f.read().rsplit(")", 1)[1].split()
+        except (OSError, IndexError):
             continue
-        kids.setdefault(ppid, []).append(int(d))
-    return kids
+        out[int(d)] = (int(fields[1]), fields)
+    return out
 
 
-def _hwm_kb(pid: int) -> int:
-    try:
-        with open(f"/proc/{pid}/status") as f:
-            for line in f:
-                if line.startswith("VmHWM:"):
-                    return int(line.split()[1])
-    except OSError:
-        pass
-    return 0
+def _tree(root: int, stats: dict) -> list[list[str]]:
+    kids: dict[int, list[int]] = {}
+    for pid, (ppid, _f) in stats.items():
+        kids.setdefault(ppid, []).append(pid)
+    out, todo = [], [root]
+    while todo:
+        pid = todo.pop()
+        if pid in stats:
+            out.append(stats[pid][1])
+        todo.extend(kids.get(pid, []))
+    return out
 
 
-class PeakRss:
-    """Samples the VmHWM of every process in the tree under `root_pid`
-    (the driver's Python, its JVM and the JVM's Python workers).  The
-    peak is the sum over processes of each one's high-water mark."""
+class TreeMeter:
+    """CPU time and memory of the process tree under `root_pid`: the
+    driver's Python, its JVM and the JVM's Python workers.
 
-    #: seconds between samples; Python workers can live shorter than this
+    `cpu_s()` is the user + system time the tree has used so far,
+    including its children that have exited (the kernel adds a reaped
+    child's time to its parent).  Differences of it give the CPU time
+    of an interval.  A background thread samples the tree's summed
+    resident memory; `stop()` returns the largest sum seen, in MB.
+    When the tree is this process, the sampling thread's own CPU time
+    is left out of `cpu_s()`."""
+
+    #: seconds between memory samples
     INTERVAL = 0.25
 
     def __init__(self, root_pid: int) -> None:
         self.root = root_pid
-        self.hwm: dict[int, int] = {}
+        self.peak_kb = 0.0
+        #: how the peak was made up: process count, largest process
+        self.peak_parts: dict = {}
+        self._own_s = 0.0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True,
-                                        name="perfbench-rss")
+                                        name="perfbench-meter")
+
+    def cpu_s(self) -> float:
+        ticks = sum(int(v) for f in _tree(self.root, _stats())
+                    for v in f[11:15])
+        own = self._own_s if self.root == os.getpid() else 0.0
+        return ticks / _TICK - own
 
     def sample(self) -> None:
-        kids = _children_map()
-        todo = [self.root]
-        while todo:
-            pid = todo.pop()
-            self.hwm[pid] = max(self.hwm.get(pid, 0), _hwm_kb(pid))
-            todo.extend(kids.get(pid, []))
+        tree = _tree(self.root, _stats())
+        kb = sum(int(f[21]) for f in tree) * _PAGE / 1024.0
+        if kb > self.peak_kb:
+            self.peak_kb = kb
+            self.peak_parts = {"processes": len(tree), "largest_mb": max(
+                int(f[21]) for f in tree) * _PAGE / 2**20}
 
     def _loop(self) -> None:
         while not self._stop.wait(self.INTERVAL):
             self.sample()
+            self._own_s = time.thread_time()
 
-    def start(self) -> "PeakRss":
+    def start(self) -> "TreeMeter":
         self.sample()
         self._thread.start()
         return self
@@ -245,7 +275,7 @@ class PeakRss:
         self._stop.set()
         self._thread.join(timeout=10)
         self.sample()
-        return sum(self.hwm.values()) / 1024.0
+        return self.peak_kb / 1024.0
 
 
 # ---------------------------------------------------------------------------
@@ -271,6 +301,11 @@ class Op:
     end: float
     ok: bool
     kind: str = "script"
+    #: CPU seconds the program's process tree used during the operation
+    #: and the Spark jobs it submitted (batch workloads only; concurrent
+    #: REST requests share one figure of each)
+    cpu_s: float = 0.0
+    jobs: int = 0
 
     @property
     def seconds(self) -> float:
@@ -283,6 +318,10 @@ class Outcome:
     setup_s: float
     window_s: float
     ops: list[Op]
+    #: Spark jobs and CPU seconds of the program's process tree per
+    #: operation
+    op_jobs: float
+    op_cpu_s: float
     peak_rss_mb: float
     info: dict = field(default_factory=dict)
     per_layer: dict = field(default_factory=dict)
@@ -292,21 +331,18 @@ class Outcome:
 
 
 def end_to_end(o: Outcome) -> dict[str, float]:
-    secs = [op.seconds for op in o.ops]
-    good = sum(op.ok for op in o.ops)
-    return {
-        "setup_s": o.setup_s,
-        "script_s": statistics.median(secs),
-        "latency_ms_p90": quantile(secs, 0.9) * 1000.0,
-        "scripts_per_s": good / o.window_s,
-        "peak_rss_mb": o.peak_rss_mb,
-    }
+    return {"setup_s": o.setup_s, "op_jobs": o.op_jobs}
 
 
 def op_summary(o: Outcome) -> dict:
+    """The window's wall-clock figures, for the description line: the
+    operation count, its quartiles, p90 and correct operations per
+    second."""
     secs = [op.seconds for op in o.ops]
     return {"n": len(secs), "q1_s": quantile(secs, 0.25),
-            "median_s": statistics.median(secs), "q3_s": quantile(secs, 0.75)}
+            "median_s": statistics.median(secs), "q3_s": quantile(secs, 0.75),
+            "p90_ms": quantile(secs, 0.9) * 1000.0,
+            "ok_per_s": sum(op.ok for op in o.ops) / o.window_s}
 
 
 def replace_literals(text: str, mapping: dict[str, str]) -> str:
@@ -377,11 +413,14 @@ class Window:
         return time.time() - self.start
 
 
-def timed(fn) -> Op:
-    """Run one operation and record its wall interval."""
-    t0 = time.time()
+def timed(fn, meter: TreeMeter, spark) -> Op:
+    """Run one operation and record its wall interval, the CPU time
+    `meter`'s process tree used meanwhile and the jobs it submitted."""
+    j0, c0, t0 = jobs_started(spark), meter.cpu_s(), time.time()
     fn()
-    return Op(t0, time.time(), True)
+    t1 = time.time()
+    return Op(t0, t1, True, cpu_s=meter.cpu_s() - c0,
+              jobs=jobs_started(spark) - j0)
 
 
 def traced_layers(tracer, spark, win: Window, ops: list[Op]) -> dict:

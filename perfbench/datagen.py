@@ -153,7 +153,7 @@ def corpus(rng: np.random.Generator, n: int) -> list[str]:
 
 def _day(rng: np.random.Generator, history: list[tuple[int, str]],
          fresh: list[tuple[int, str]], n_day: int, first_id: int,
-         shares: dict) -> tuple[pa.Table, list[tuple[int, str]], dict]:
+         shares: dict) -> tuple[pa.Table, dict]:
     """One ingest day from `history` and `fresh` (base, text) entries,
     where a base is the document a text was derived from: exact
     re-ingests and near duplicates (one word appended) of seeded
@@ -161,7 +161,7 @@ def _day(rng: np.random.Generator, history: list[tuple[int, str]],
     larger id is dropped) and new documents.  Every duplicate comes
     from a different base, so the day's only near-duplicate clusters
     inside the batch are its intra-day pairs.  Returns the day's table
-    and (base, text) entries."""
+    and its properties."""
     n_exact = int(n_day * shares["exact"])
     n_near = int(n_day * shares["near"])
     n_pairs = int(n_day * shares["intra_pairs"])
@@ -181,31 +181,26 @@ def _day(rng: np.random.Generator, history: list[tuple[int, str]],
                + fresh[n_pairs:n_pairs + n_new])
     ids = (first_id + rng.permutation(len(entries))).astype(np.int64)
     table = pa.table({"doc_id": ids, "text": [t for _, t in entries]})
-    return table, entries, {"docs": len(entries), "exact_dups": n_exact,
+    return table, {"docs": len(entries), "exact_dups": n_exact,
                             "near_dups": n_near, "intra_pairs": n_pairs,
                             "new_docs": n_new}
 
 
 def lake_days(seed: int, n_lake: int, n_day: int) -> tuple[list[pa.Table], dict]:
-    """The day-0 lake and two ingest days.  Day 1 duplicates day-0
-    documents; day 2 duplicates documents of both earlier days, so its
-    near duplicates of day-1 arrivals are found only through the
-    signatures day 1 appended.  The duplicate shares and which
-    documents are duplicated are seeded."""
+    """The day-0 lake and one ingest day that duplicates day-0
+    documents.  The duplicate shares and which documents are
+    duplicated are seeded."""
     rng = np.random.default_rng([seed, 2])
     shares = {"exact": round(float(rng.uniform(0.08, 0.12)), 3),
               "near": round(float(rng.uniform(0.08, 0.12)), 3),
               "intra_pairs": round(float(rng.uniform(0.04, 0.06)), 3)}
-    entries = list(enumerate(corpus(rng, n_lake + 2 * n_day)))
+    entries = list(enumerate(corpus(rng, n_lake + n_day)))
     lake = entries[:n_lake]
     lake0 = pa.table({"doc_id": rng.permutation(n_lake).astype(np.int64),
                       "text": [t for _, t in lake]})
-    day1, day1_entries, p1 = _day(rng, lake, entries[n_lake:n_lake + n_day],
-                                  n_day, 10_000_000, shares)
-    day2, _, p2 = _day(rng, lake + day1_entries, entries[n_lake + n_day:],
-                       n_day, 20_000_000, shares)
-    return [lake0, day1, day2], {"lake_docs": n_lake, "day1": p1, "day2": p2,
-                                 "shares": shares}
+    day1, p1 = _day(rng, lake, entries[n_lake:], n_day, 10_000_000,
+                       shares)
+    return [lake0, day1], {"lake_docs": n_lake, "day1": p1, "shares": shares}
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -30,12 +30,15 @@ import urllib.request
 
 import numpy as np
 
-from common import (BENCH_DIR, Op, Outcome, PeakRss, Window, frames_match,
+from common import (BENCH_DIR, Op, Outcome, TreeMeter, Window, frames_match,
                     gen_inputs)
 
 KINDS = ["json_agg", "orders_range", "branch", "token_count", "analyze"]
 CLIENTS = 2
 VARIANTS = 8
+#: untimed rounds per client before the window: the first round pays
+#: the cold JVM, the second the steepest part of its JIT warm-up
+WARM_ROUNDS = 2
 
 
 def _jsonl(rows: list[dict]) -> str:
@@ -198,8 +201,9 @@ class Client(threading.Thread):
         return Op(t0, t1, answer_ok(kind, got, variant["expected"]), kind)
 
     def warm_up(self) -> None:
-        for kind in KINDS:
-            self.warm_ops.append(self.request(kind, self.pool[kind][0]))
+        for r in range(WARM_ROUNDS):
+            for kind in KINDS:
+                self.warm_ops.append(self.request(kind, self.pool[kind][r]))
 
     def run(self) -> None:
         last_round = 0.0
@@ -226,6 +230,13 @@ def _start_server(work, traced: bool) -> tuple[subprocess.Popen, dict]:
     return proc, json.loads(line)
 
 
+def _server_jobs(proc: subprocess.Popen) -> int:
+    """Spark jobs the server's session has submitted so far."""
+    proc.stdin.write("jobs\n")
+    proc.stdin.flush()
+    return json.loads(proc.stdout.readline())["jobs"]
+
+
 def _stop_server(proc: subprocess.Popen) -> None:
     proc.stdin.close()
     try:
@@ -246,7 +257,7 @@ def run(work, seed: int, seconds: float, trace: bool, tiny: bool,
     proc, ready = _start_server(work, trace)
     try:
         url = f"http://127.0.0.1:{ready['port']}"
-        rss = PeakRss(ready["pid"]).start()
+        meter = TreeMeter(ready["pid"]).start()
         clients = [Client(url, f"bench_{i}", pool, seed, i,
                           corrupt and i == 0) for i in range(CLIENTS)]
         warm = [threading.Thread(target=c.warm_up) for c in clients]
@@ -255,6 +266,7 @@ def run(work, seed: int, seconds: float, trace: bool, tiny: bool,
         for t in warm:
             t.join()
         setup_s = time.time() - t0
+        jobs0, cpu0 = _server_jobs(proc), meter.cpu_s()
         win = Window(seconds)
         for c in clients:
             c.win = win
@@ -262,7 +274,9 @@ def run(work, seed: int, seconds: float, trace: bool, tiny: bool,
         for c in clients:
             c.join()
         window_s = win.close()
-        peak = rss.stop()
+        window_cpu_s = meter.cpu_s() - cpu0
+        window_jobs = _server_jobs(proc) - jobs0
+        peak = meter.stop()
         for c in clients:
             if c.error is not None:
                 raise c.error
@@ -287,8 +301,10 @@ def run(work, seed: int, seconds: float, trace: bool, tiny: bool,
              for k in KINDS
              if (v := [op.seconds for op in ops if op.kind == k])}
     info = {"stamp": ready["stamp"], "inputs": props, "clients": CLIENTS,
-            "loop": "closed", "requests_by_kind": kinds}
+            "loop": "closed", "requests_by_kind": kinds,
+            "peak_rss": meter.peak_parts}
     checks = [op.ok for c in clients for op in c.warm_ops]
-    return Outcome(setup_s, window_s, ops, peak, info, layers,
+    return Outcome(setup_s, window_s, ops, window_jobs / len(ops),
+                   window_cpu_s / len(ops), peak, info, layers,
                    checks_attempted=len(checks),
                    checks_failed=checks.count(False))

@@ -3,9 +3,11 @@ host-correct session, optionally traced.
 
     python3 perfbench/rest_server.py --work <dir> --trace <0|1>
 
-Prints one JSON line {"port", "ui", "pid"} when it accepts requests,
-then serves until its stdin closes.  A traced server writes its spans
-to <work>/spans.json before the session stops.
+Prints one JSON line {"port", "ui", "pid", "stamp"} when it accepts
+requests, then serves until its stdin closes.  Each line "jobs" on
+stdin is answered with one JSON line {"jobs"}: the Spark jobs the
+session has submitted so far.  A traced server writes its spans to
+<work>/spans.json before the session stops.
 """
 
 from __future__ import annotations
@@ -15,7 +17,8 @@ import json
 import os
 import sys
 
-from common import prepare_env, start_session, stamp, stop_session
+from common import (jobs_started, prepare_env, start_session, stamp,
+                    stop_session)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -37,7 +40,9 @@ def main(argv: list[str] | None = None) -> int:
               flush=True)
         # serve until the client, done with the monitoring API, closes
         # stdin
-        sys.stdin.read()
+        for line in sys.stdin:
+            if line.strip() == "jobs":
+                print(json.dumps({"jobs": jobs_started(spark)}), flush=True)
         srv.stop()
         if tracer is not None:
             from tracing import spans_to_json

@@ -14,7 +14,9 @@ reference outside the timed window.  The last line of stdout is one
 JSON object: {"correct", "attempted", "failed", "metrics"}; metrics
 are the end-to-end metrics with --trace 0 and the per-layer metrics
 with --trace 1.  The line before it describes the run (host stamp,
-seed, input properties, sample counts, error share).
+seed, input properties, the window's ungated times: wall-clock
+figures with their sample count, CPU time per operation and peak
+memory; error share).
 """
 
 from __future__ import annotations
@@ -27,8 +29,7 @@ import sys
 
 from common import ROOT, WorkDir, end_to_end, op_summary, prepare_env
 
-END_TO_END_UNITS = {"setup_s": "s", "script_s": "s", "latency_ms_p90": "ms",
-                    "scripts_per_s": "1/s", "peak_rss_mb": "MB"}
+END_TO_END_UNITS = {"setup_s": "s", "op_jobs": "count"}
 WORKLOADS = ("tpch_report", "lake_day", "rest_interactive")
 
 
@@ -48,6 +49,8 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool,
     failed = sum(not op.ok for op in out.ops) + out.checks_failed
     if trace:
         from tracing import PER_LAYER_UNITS
+        out.per_layer["trace.op_cpu_s"] = out.op_cpu_s
+        out.per_layer["trace.peak_rss_mb"] = out.peak_rss_mb
         metrics = {k: {"value": out.per_layer[k], "unit": u}
                    for k, u in PER_LAYER_UNITS.items()}
     else:
@@ -57,7 +60,8 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool,
               "failed": failed, "metrics": metrics}
     desc = {"workload": name, "seed": seed, "seconds": seconds,
             "trace": int(trace), "error_share": failed / attempted,
-            "window_s": out.window_s, "ops": op_summary(out),
+            "window_s": out.window_s, "wall": op_summary(out),
+            "op_cpu_s": out.op_cpu_s, "peak_rss_mb": out.peak_rss_mb,
             **out.info}
     return result, desc
 

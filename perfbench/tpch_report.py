@@ -11,11 +11,12 @@ the DuckDB oracle runs the same texts with the same values.
 from __future__ import annotations
 
 import os
+import statistics
 import time
 
 import numpy as np
 
-from common import (Outcome, PeakRss, Window, frames_match, gen_inputs,
+from common import (Outcome, TreeMeter, Window, frames_match, gen_inputs,
                     replace_literals, session, stamp, timed, traced_layers)
 from tracing import start_tracer
 
@@ -99,7 +100,7 @@ def run(work, seed: int, seconds: float, trace: bool, tiny: bool,
         eng.execute(script(data, work.sub("out", tag), env, queries))
 
     tracer = start_tracer() if trace else None
-    rss = PeakRss(os.getpid()).start()
+    meter = TreeMeter(os.getpid()).start()
     with session(work, trace) as (spark, t0):
         info = {"stamp": stamp(spark)}
         eng = Engine(spark)
@@ -107,9 +108,9 @@ def run(work, seed: int, seconds: float, trace: bool, tiny: bool,
         setup_s = time.time() - t0
         win, ops = Window(seconds), []
         while win.admits(ops[-1].seconds if ops else 0.0):
-            ops.append(timed(lambda: one(f"rep{len(ops)}")))
+            ops.append(timed(lambda: one(f"rep{len(ops)}"), meter, spark))
         window_s = win.close()
-        peak = rss.stop()
+        peak = meter.stop()
         layers = traced_layers(tracer, spark, win, ops)
 
     con = duckdb.connect()
@@ -128,5 +129,9 @@ def run(work, seed: int, seconds: float, trace: bool, tiny: bool,
                 got = pd.concat([got, got.head(1)])
             rows[name] = len(got)
             op.ok = op.ok and frames_match(got, want[name])
-    info.update(params=env, inputs=props, result_rows=rows)
-    return Outcome(setup_s, window_s, ops, peak, info, layers)
+    info.update(params=env, inputs=props, peak_rss=meter.peak_parts,
+                result_rows=rows)
+    return Outcome(setup_s, window_s, ops,
+                   statistics.median(op.jobs for op in ops),
+                   statistics.median(op.cpu_s for op in ops), peak, info,
+                   layers)

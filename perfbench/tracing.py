@@ -245,7 +245,7 @@ PER_LAYER_UNITS: dict[str, str] = {
     "spark.shuffle_write_bytes": "bytes", "spark.spill_bytes": "bytes",
     "spark.python_bytes_sent": "bytes",
     "spark.python_bytes_received": "bytes",
-    "trace.script_s": "s",
+    "trace.script_s": "s", "trace.op_cpu_s": "s", "trace.peak_rss_mb": "MB",
 }
 
 
