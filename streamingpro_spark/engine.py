@@ -18,6 +18,7 @@ The optional passes are first-class too:
 from __future__ import annotations
 
 import os
+import zlib
 from typing import TYPE_CHECKING
 
 from streamingpro_spark import parser as P
@@ -34,6 +35,13 @@ _SHIPPED_CONTEXTS: "weakref.WeakSet" = weakref.WeakSet()
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
+
+
+def _default_out_name(algorithm: str, table: str) -> str:
+    """View name for an un-aliased train/run/predict output.  A stable
+    digest, so the name (and every plan over it) is the same in every
+    process; the built-in ``hash`` of a str is salted per process."""
+    return f"__tmp_{zlib.crc32((algorithm + table).encode()) % 10**8}"
 
 
 def _ship_package(spark: "SparkSession") -> None:
@@ -521,7 +529,8 @@ class Engine:
             out = alg.train(df, path, options, ctx)
         else:  # run — by convention transforms, same code path
             out = alg.train(df, path, options, ctx)
-        out_name = stmt.out_table or f"__tmp_{abs(hash(stmt.algorithm + stmt.table)) % 10**8}"
+        out_name = stmt.out_table or _default_out_name(stmt.algorithm,
+                                                       stmt.table)
         if out is not None:
             ctx.register(out, out_name)
 

@@ -1222,6 +1222,49 @@ class SoftDedup(ETAlgorithm):
                                    "20")]
 
 
+def _dup_graph(pairs, ids, a_col, b_col):
+    """DupClusters' propagation graph, lazy: both directions of every
+    pair plus a self-loop on each endpoint, kept only where BOTH ends
+    are input ids.  The self-loops are the identity of `A + I`, so one
+    join+groupBy per round sees a node's own label next to its
+    neighbours'.  Restricting `dst` as well as `src` is what stops an
+    out-of-corpus id from bridging two docs (round 1 reads raw `dst`).
+    One explode instead of a union: each union branch would repeat the
+    restriction subtree."""
+    a, b = F.col(a_col), F.col(b_col)
+    e = F.explode(F.array(F.struct(a.alias("src"), b.alias("dst")),
+                          F.struct(b.alias("src"), a.alias("dst")),
+                          F.struct(a.alias("src"), a.alias("dst")),
+                          F.struct(b.alias("src"), b.alias("dst"))))
+    return (pairs.select(e.alias("e")).select("e.src", "e.dst")
+            .join(ids.select(F.col("id").alias("src")), "src", "left_semi")
+            .join(ids.select(F.col("id").alias("dst")), "dst", "left_semi"))
+
+
+def _dup_rounds(graph, labels, rounds):
+    """`rounds` lazy min-label propagation steps over `graph` (runs no
+    action) → (id, label, __chg), where __chg flags a label the LAST
+    step lowered.  `labels=None` starts from every node labelled by its
+    own id, which makes the first step join-free.  Every step reads the
+    previous labels once, so the plan grows by a constant per round."""
+    for _ in range(rounds):
+        if labels is None:
+            labels = (graph.groupBy(F.col("src").alias("id"))
+                      .agg(F.min("dst").alias("label"))
+                      .withColumn("__chg", F.col("label") < F.col("id")))
+            continue
+        nl = labels.select(F.col("id").alias("dst"),
+                           F.col("label").alias("nl"))
+        labels = (graph.join(nl, "dst")
+                  .groupBy(F.col("src").alias("id"))
+                  .agg(F.min("nl").alias("label"),
+                       F.min(F.when(F.col("src") == F.col("dst"),
+                                    F.col("nl"))).alias("__old"))
+                  .select("id", "label",
+                          (F.col("label") < F.col("__old")).alias("__chg")))
+    return labels
+
+
 @register_et("DupClusters")
 class DupClusters(ETAlgorithm):
     """Connected components over near-dup pairs — the step that turns
@@ -1233,20 +1276,21 @@ class DupClusters(ETAlgorithm):
     → (doc_id, cluster_id, keep) with cluster_id = min id in the
     component and keep = (doc_id == cluster_id).
 
-    Algorithm: min-label propagation to fixpoint, over ONLY the nodes
-    that appear in the pair graph (optimization round 11) — a doc with
-    no pair row can never change its label, so the per-round join +
-    map-side-combinable groupBy is dup-graph-sized, not corpus-sized;
-    singletons re-attach through one broadcast-ready left join at the
-    end.  Rounds run two per ACTION (the convergence count is the
-    per-action fixed cost on shallow graphs; judging convergence on
-    the last round alone is sound because propagation is monotone).
-    The iteration count is the component diameter — near-dup clusters
-    are shallow (dup sets are cliques or short chains), so this
-    converges in a few rounds.  `maxIter` bounds pathological chains.
-    (Very-large-diameter graphs would want pointer-jumping /
-    alternating-star — documented tradeoff, out of scope for
-    dedup-shaped graphs.)
+    Algorithm: min-label propagation to fixpoint as a min-semiring
+    mat-vec with `A + I` (Scalable Linear Algebra Programming for Big
+    Data Analysis, EDBT 2021).  The graph (`_dup_graph`) is built once:
+    both edge directions plus a self-loop per endpoint, over ONLY the
+    nodes that appear in the pair graph AND the input — a doc with no
+    pair row can never change its label, so every round is
+    dup-graph-sized, not corpus-sized; singletons re-attach through one
+    broadcast-ready left join at the end.  Each round (`_dup_rounds`)
+    is one `graph ⋈ labels` → `groupBy(src)`: `min(nl)` is the new
+    label and the self-loop's `nl` the old one, so the labels are read
+    once per round and the plan grows linearly.  Round 1 is join-free
+    (every label is still its own id).  The iteration count is the
+    component diameter — near-dup clusters are shallow (cliques or
+    short chains); `maxIter` bounds pathological chains with a rendered
+    error.  (O(log d) pointer-jumping would pay only on deep graphs.)
     """
 
     def train(self, df, path, params, context=None):
@@ -1258,84 +1302,35 @@ class DupClusters(ETAlgorithm):
         if not pairs_tbl:
             raise ValueError('DupClusters needs pairsTable="..."')
         spark = df.sparkSession
-        pairs = spark.table(pairs_tbl)
-        # persist + materialize the edge list ONCE: pairsTable is often a
-        # lazy temp view over MinHashDedup output (examples/04), and
-        # without this every iteration re-executes the whole upstream
-        # LSH candidate pipeline
-        edges = script_cache(
-            pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-                 .union(pairs.select(F.col(b_col).alias("src"),
-                                     F.col(a_col).alias("dst"))),
-            context, "dup_edges")
-        edges.count()
-        # Propagate over ONLY the nodes that appear in the pair graph
-        # (optimization round 11, guide §2.3/§1.2): a doc with no pair
-        # row can never change its label — iterating the full corpus
-        # made every round's join + convergence count CORPUS-sized
-        # (at 100 TB: a full-corpus shuffle per round for a dup graph
-        # that is typically <1% of the corpus).  Non-edge docs are
-        # singletons attached by one broadcast-ready left join at the
-        # end.  The df-semi-join keeps the old semantics exactly: an
-        # edge endpoint NOT present in df contributed no label before
-        # (its labels row never existed) and still contributes none —
-        # two df nodes connected only THROUGH an out-of-corpus id must
-        # not merge.  distinct() collapses duplicate-id input rows so
-        # the final join cannot fan out (the old per-row labels carried
-        # identical values for duplicate ids anyway).
         all_ids = df.select(F.col(id_col).alias("id"))
-        labels_cache = (all_ids.distinct()
-                        .join(edges.select(F.col("src").alias("id"))
-                              .distinct(),
-                              "id", "left_semi")
-                        .select("id", F.col("id").alias("label")).persist())
-        labels = labels_cache
+        # cached once and materialized by the first round's action:
+        # pairsTable is often a lazy view over MinHashDedup output
+        # (examples/04), which every round would otherwise re-run
+        graph = script_cache(
+            _dup_graph(spark.table(pairs_tbl), all_ids, a_col, b_col),
+            context, "dup_graph")
         ckpt_every = get_int(params, "checkpointEvery", 5)
-        converged, changed = False, -1
+        # labels: the persisted (id, label, __chg) of the last action
+        labels, converged, changed = None, False, -1
         it = 0
         # Rounds per ACTION grow 2→2→4→8 while the graph keeps
-        # propagating (optimization round 12, verdict item 7; was a
-        # flat 2 in round 11): each action costs a fixed driver round
-        # trip (planning + AQE + codegen), so a diameter-d chain paid
-        # d/2 actions.  Growing from the THIRD action keeps the first
-        # four rounds identical to round 11 — near-dup graphs are
-        # overwhelmingly shallow (cliques converge in one action,
-        # verified-pair components in ≤2) and must not pay speculative
-        # rounds — while a genuinely deep chain still reaches depth d
-        # in O(log d) actions with the overshoot bounded by the
-        # doubling argument (wasted rounds < rounds needed, each a
-        # no-change join over the dup graph, not the corpus).  The cap
-        # of 8 keeps the per-action lazy plan (one join+agg per round)
-        # shallow enough that analysis stays trivial.  Convergence is
-        # judged on the LAST round's change count alone, which is
-        # sound because min-label propagation is monotone: a round
-        # with zero changes IS the fixpoint, whatever earlier rounds
-        # did.
+        # propagating: each action costs a fixed driver round trip
+        # (planning + AQE + codegen), so shallow near-dup graphs
+        # (cliques converge in one action, verified-pair components in
+        # ≤2) pay no speculative rounds, while a diameter-d chain needs
+        # about d/8 actions.  Convergence is judged on the LAST round's
+        # change count alone, which is sound because min-label
+        # propagation is monotone: a round with zero changes IS the
+        # fixpoint, whatever earlier rounds did.
         span_target, action_no = 2, 0
         while it < max_iter and not converged:
             span = min(span_target, max_iter - it)
             action_no += 1
             if action_no >= 2:
                 span_target = min(span_target * 2, 8)
-            cur = labels
-            for _ in range(span):
-                # candidate label via neighbors: min over (own, nbrs')
-                neigh = (edges.join(cur.select("id", "label")
-                                    .withColumnRenamed("id", "dst")
-                                    .withColumnRenamed("label", "nlabel"),
-                                    "dst")
-                         .groupBy(F.col("src").alias("id"))
-                         .agg(F.min("nlabel").alias("nmin")))
-                # ONE join yields both the next labels and the change
-                # flag (was: a second labels-join purely to count)
-                cur = (cur.join(neigh, "id", "left")
-                       .select("id",
-                               F.least("label", "nmin").alias("label"),
-                               (F.col("nmin") < F.col("label"))
-                               .alias("__chg")))
-            # truncate lineage every few rounds: each round otherwise
-            # deepens the plan (join-on-join-on-...), and by round ~15
-            # analysis time dominates compute
+            cur = _dup_rounds(graph, labels, span)
+            # truncate lineage every few rounds so analysis time stays
+            # flat however many rounds run
             if (it // ckpt_every) != ((it + span) // ckpt_every):
                 sc = spark.sparkContext
                 cur = (cur.checkpoint(eager=False)
@@ -1343,35 +1338,28 @@ class DupClusters(ETAlgorithm):
                        else cur.localCheckpoint(eager=False))
             cur = cur.persist()
             changed = cur.filter(F.col("__chg")).count()
-            labels_cache.unpersist()
-            labels_cache = cur
-            labels = cur.drop("__chg")
+            if labels is not None:
+                labels.unpersist()
+            labels = cur
             it += span
-            if changed == 0:
-                converged = True
+            converged = changed == 0
         if not converged:
             # the last allowed round may have reached the fixpoint
             # EXACTLY (changed > 0 but the labels are now final) —
             # convergence is only observable by a zero-change round, so
-            # run one verification pass before declaring failure: a
-            # correct result tuned to maxIter == component depth must
-            # not become a spurious error (round-8 review finding)
-            neigh = (edges.join(labels.withColumnRenamed("id", "dst")
-                                .withColumnRenamed("label", "nlabel"), "dst")
-                     .groupBy(F.col("src").alias("id"))
-                     .agg(F.min("nlabel").alias("nmin")))
-            still = (labels.join(neigh, "id", "left")
-                     .filter(F.least(F.col("label"), F.col("nmin"))
-                             != F.col("label")).count())
-            if still == 0:
-                converged = True
+            # one more step decides before declaring failure: a correct
+            # result tuned to maxIter == component depth must not
+            # become a spurious error
+            step = _dup_rounds(graph, labels, 1)
+            converged = step.filter(F.col("__chg")).count() == 0
+            labels = step if labels is None else labels
         if not converged:
-            # round-8: a component with diameter > maxIter would come
-            # out MISLABELED (split into several clusters, extra docs
+            # a component with diameter > maxIter would come out
+            # MISLABELED (split into several clusters, extra docs
             # marked keep) — fail with the remedy instead of silently
             # shipping wrong survivors into a dedup pipeline
-            labels_cache.unpersist()
-            edges.unpersist()
+            labels.unpersist()
+            graph.unpersist()
             state = (f"{changed} labels still changing" if changed >= 0
                      else "no rounds run")
             raise ValueError(
@@ -1386,23 +1374,25 @@ class DupClusters(ETAlgorithm):
         # singletons (no pair row) re-attach here: labels is distinct
         # on id and tiny (pair-graph nodes only), so AQE broadcasts it
         # and the corpus side is never shuffled; a missing label means
-        # "own cluster"
+        # "own cluster".  Every label is an input id, so casting it to
+        # the id type (the pairs' may be wider) is lossless.
         out = (all_ids
                .join(labels.withColumnRenamed("label", "__lab"),
                      "id", "left")
                .select(F.col("id").alias(id_col),
-                       F.coalesce(F.col("__lab"), F.col("id"))
+                       F.coalesce(F.col("__lab").cast(
+                           all_ids.schema["id"].dataType), F.col("id"))
                         .alias("cluster_id"))
                .withColumn("keep", F.col(id_col) == F.col("cluster_id")))
         mat = eager_materialize(out, params, context)
         if mat is not out:
-            labels_cache.unpersist()
-            edges.unpersist()
+            labels.unpersist()
+            graph.unpersist()
         elif context is not None:
             # lazy path: hand the final label cache to the engine's
             # end-of-script reaper
-            context.cached_tables[f"__et_dup_labels_{id(labels_cache)}"] = \
-                (labels_cache, "script")
+            context.cached_tables[f"__et_dup_labels_{id(labels)}"] = \
+                (labels, "script")
         return mat
 
     def explain_params(self):

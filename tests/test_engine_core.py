@@ -1127,3 +1127,25 @@ def test_exec_depth_is_per_thread(engine):
         t.join()
     assert not errs, errs
     assert not seen_dirty, seen_dirty
+
+
+def test_default_output_name_is_stable_across_processes(engine):
+    """An un-aliased run's output view is named by a stable digest, not
+    by the per-process salted str hash, so plans can be diffed between
+    runs."""
+    import os
+    import subprocess
+    import sys
+    from streamingpro_spark.engine import _default_out_name
+    engine.execute("select 1 as doc_id, 'a' as text as dn_docs;"
+                   "run dn_docs as ExactDedup.``;")
+    name = _default_out_name("ExactDedup", "dn_docs")
+    assert engine.context.spark.catalog.tableExists(name)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = ("from streamingpro_spark.engine import _default_out_name; "
+            "print(_default_out_name('ExactDedup', 'dn_docs'))")
+    names = {subprocess.run([sys.executable, "-c", code], cwd=root,
+                            env={**os.environ, "PYTHONHASHSEED": seed},
+                            capture_output=True, text=True, check=True)
+             .stdout.strip() for seed in ("1", "2")}
+    assert names == {name}

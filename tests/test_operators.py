@@ -1366,6 +1366,63 @@ def test_dup_clusters_out_of_corpus_endpoint_does_not_bridge(engine):
     assert got[11] == (11, True)                 # singleton untouched
 
 
+def test_dup_clusters_smaller_out_of_corpus_id_does_not_bridge(engine):
+    """Round 1 takes min(dst) with no join, so the graph must drop an
+    edge whose dst is not an input id: here id 1 is smaller than both
+    docs it links, and would otherwise become their shared label."""
+    df = engine.execute("""
+    select * from (values (5, 1), (1, 7), (3, 2)) v(doc_a, doc_b)
+    as small_oc_pairs;
+    select * from (values (2), (3), (5), (7), (11)) v(doc_id)
+    as small_oc_docs;
+    run small_oc_docs as DupClusters.`` where pairsTable="small_oc_pairs"
+    as out;
+    """)
+    got = {r["doc_id"]: (r["cluster_id"], r["keep"]) for r in df.collect()}
+    assert got == {2: (2, True), 3: (2, False), 5: (5, True),
+                   7: (7, True), 11: (11, True)}
+
+
+def test_dup_clusters_mixed_pair_column_types(engine):
+    """int and bigint pair columns share one exploded edge struct; the
+    output keeps the id column's type."""
+    df = engine.execute("""
+    select cast(a as int) as doc_a, cast(b as bigint) as doc_b
+    from (values (1, 2), (2, 3)) v(a, b) as mixed_pairs;
+    select cast(x as int) as doc_id from (values (1), (2), (3), (4)) v(x)
+    as mixed_docs;
+    run mixed_docs as DupClusters.`` where pairsTable="mixed_pairs" as out;
+    """)
+    assert df.schema["cluster_id"].dataType.simpleString() == "int"
+    got = {r["doc_id"]: (r["cluster_id"], r["keep"]) for r in df.collect()}
+    assert got == {1: (1, True), 2: (1, False), 3: (1, False),
+                   4: (4, True)}
+
+
+def test_dup_clusters_plan_grows_linearly_in_rounds(spark):
+    """Each propagation round reads the previous labels once, so the
+    optimized plan of r lazy rounds grows by one constant step per
+    round.  (Joining the labels with their own neighbour-min aggregate
+    doubled the plan every round.)"""
+    import contextlib
+    import io
+    from streamingpro_spark.operators.dedup import _dup_graph, _dup_rounds
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(1, 50)],
+                                  "doc_a long, doc_b long")
+    ids = spark.range(1, 51)
+    graph = _dup_graph(pairs, ids, "doc_a", "doc_b")
+    lines = []
+    for r in range(1, 7):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            _dup_rounds(graph, None, r).explain(mode="extended")
+        opt = (buf.getvalue().split("== Optimized Logical Plan ==")[1]
+               .split("== Physical Plan ==")[0])
+        lines.append(len(opt.strip().splitlines()))
+    steps = {b - a for a, b in zip(lines, lines[1:])}
+    assert len(steps) == 1 and steps.pop() > 0, lines
+
+
 def test_dup_clusters_non_convergence_is_rendered_error(engine):
     """A 50-node chain (diameter 49) against the default maxIter=20:
     silently stopping would split ONE duplicate cluster into several
